@@ -625,11 +625,7 @@ object Bench {
     // compare the artifact's CPU-seconds against committed pins —
     // catches the blind spot where a flapper's WALL reads plausibly
     // while its CPU burned a multiple (memory co-tenancy inflates
-    // CPU-real work; both probes can certify clean around it). Pins
-    // are from the r21 end-of-round certified 32-core artifact — the
-    // best committed full run, itself carrying ~3× inflation vs the
-    // r20 quiet-host pin — so a hit here means WORSE THAN THE WORST
-    // KNOWN BAND, a strong re-measure signal, not a regression verdict.
+    // CPU-real work; both probes can certify clean around it).
     // Env-overridable ("name:sec,name:sec"). Pins = the MINIMUM
     // CPU-seconds observed across the r22 full-suite runs (the bottom
     // edge of the known band, so a hit means "worse than anything this

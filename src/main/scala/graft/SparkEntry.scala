@@ -2728,8 +2728,10 @@ object SparkEntry {
         .orderBy(col("bench_df").desc, col("gram"))
     }),
 
-    // ---- Validator with COUNT-WHERE fusion: same results as the
+    // ---- Validator with per-table fusion: same results as the
     // sequential path, one scan per table instead of one per rule.
+    // Every rule here fuses, b5's MAX included; its name predates that
+    // and stays because it is part of the oracle output.
     "validator_batched" -> ((s, dir) => {
       import graft.model.ValidationRule
       t(s, dir, "part"); t(s, dir, "customer")

@@ -37,12 +37,10 @@ object Sparvi {
       config: ProfilerConfig = ProfilerConfig()): TableProfile =
     Profiler.profile(df, table, config, historical)
 
-  /** Run scalar validation rules (Spark SQL over registered views). */
-  def runValidations(
-      spark: SparkSession,
-      rules: Seq[ValidationRule],
-      parallelism: Int = 1): Seq[ValidationResult] =
-    Validator.run(spark, rules, parallelism)
+  /** Run scalar validation rules (Spark SQL over registered views),
+    * fused and concurrent as in the CLI ([[Validator.runBatched]]). */
+  def runValidations(spark: SparkSession, rules: Seq[ValidationRule]): Seq[ValidationResult] =
+    Validator.runBatched(spark, rules)
 
   def loadRulesFromFile(path: String): Seq[ValidationRule] =
     RuleFiles.load(path)

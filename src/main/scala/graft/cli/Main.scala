@@ -226,8 +226,9 @@ object Main {
     // the run, results table after, then the pass/fail summary line.
     print(Render.rulesSummary(rules))
     println(s"\nRunning ${rules.size} validation rules against: $table")
-    // COUNT-WHERE rules fuse into one aggregate per table — identical
-    // results, one scan per table instead of one per rule.
+    // Scalar-aggregate rules fuse into one aggregate per table, and the
+    // fused aggregates and remaining rules run concurrently — identical
+    // results, one scan per table instead of one per fusable rule.
     val results = Validator.runBatched(s, rules)
     val failed = results.filterNot(_.isValid)
     print(Render.validationResults(results))

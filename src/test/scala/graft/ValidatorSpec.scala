@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.model.{TableMeta, ValidationRule}
+import graft.model.{TableMeta, ValidationResult, ValidationRule}
 import graft.validation.{DefaultValidations, ScalarCompare, Validator}
 
 /** End-to-end validator tests pinning the reference's validation
@@ -225,20 +225,27 @@ class ValidatorSpec extends AnyFunSuite with Matchers with SparkTestBase {
     fusableCountWhere(rule("SELECT MAX(price) FROM products")) shouldBe None
   }
 
+  /** runBatched must report exactly run()'s result for every rule, in
+    * order: same value, same verdict, and an error on the same rules. */
+  private def assertSameAsRun(rules: Seq[ValidationRule]): Seq[ValidationResult] = {
+    val sequential = Validator.run(spark, rules)
+    val batched = Validator.runBatched(spark, rules)
+    batched.map(_.ruleName) shouldBe rules.map(_.name)
+    for ((b, s) <- batched.zip(sequential)) withClue(s"${b.ruleName}: ") {
+      b.isValid shouldBe s.isValid
+      (ScalarCompare.equalsLoose(b.actualValue, s.actualValue) ||
+        (b.actualValue == null && s.actualValue == null)) shouldBe true
+      b.error.isDefined shouldBe s.error.isDefined
+    }
+    batched
+  }
+
   test("runBatched returns exactly run()'s results on generated defaults") {
     withViews {
       val rules = DefaultValidations.generate(productsDf.schema, "products",
         TableMeta(primaryKey = Seq("product_id"))) ++
         DefaultValidations.generate(employeesDf.schema, "employees")
-      val sequential = Validator.run(spark, rules)
-      val batched = Validator.runBatched(spark, rules)
-      batched should have size sequential.size
-      batched.map(_.ruleName) shouldBe sequential.map(_.ruleName)
-      for ((b, s) <- batched.zip(sequential)) {
-        b.isValid shouldBe s.isValid
-        (ScalarCompare.equalsLoose(b.actualValue, s.actualValue) ||
-          (b.actualValue == null && s.actualValue == null)) shouldBe true
-      }
+      assertSameAsRun(rules)
     }
   }
 
@@ -269,6 +276,66 @@ class ValidatorSpec extends AnyFunSuite with Matchers with SparkTestBase {
       results(0).actualValue shouldBe 1L
       results(1).isValid shouldBe false
       results(1).actualValue shouldBe 4L
+    }
+  }
+
+  test("runBatched: a mixed suite returns run()'s results rule by rule, in order") {
+    withViews {
+      val rules = Seq(
+        ValidationRule("cw_negative", "", "SELECT COUNT(*) FROM products WHERE price < 0", "equals", 1),
+        ValidationRule("agg_avg", "", "SELECT AVG(price) FROM products", "between", Seq(20, 30)),
+        ValidationRule("agg_null_rate", "",
+          """SELECT ROUND(CAST(COUNT(*) FILTER (WHERE department IS NULL) * 100.0 / NULLIF(COUNT(*), 0) AS DOUBLE), 4)
+            |FROM employees""".stripMargin, "less_than", 25.0),
+        ValidationRule("sub_above_avg", "",
+          "SELECT COUNT(*) FROM products WHERE price > (SELECT AVG(price) FROM products)", "equals", 1),
+        ValidationRule("grouped", "",
+          "SELECT COUNT(*) FROM (SELECT category FROM products GROUP BY category) g", "equals", 3),
+        ValidationRule("dup", "", "SELECT MIN(price) FROM products", "less_than", 0),
+        ValidationRule("err_incomparable", "", "SELECT MAX(category) FROM products", "greater_than", 5),
+        ValidationRule("dup", "", "SELECT MAX(price) FROM products", "less_than", 0),
+        ValidationRule("err_bad_sql", "", "SELECT FROM nowhere zzz", "equals", 0),
+        ValidationRule("err_no_such_col_1", "", "SELECT SUM(no_such_col_1) FROM products", "equals", 0),
+        ValidationRule("err_no_such_col_2", "",
+          "SELECT COUNT(*) FROM employees WHERE no_such_col_2 > 0", "equals", 0),
+        ValidationRule("cw_employees", "", "SELECT COUNT(*) FROM employees", "equals", 10))
+      val fusedRules = Set("cw_negative", "agg_avg", "agg_null_rate", "dup", "err_incomparable",
+        "cw_employees", "err_no_such_col_2")
+      rules.map(r => r.name -> Validator.plan(spark, r).fused.isDefined)
+        .foreach { case (n, f) => withClue(n)(f shouldBe fusedRules(n)) }
+
+      val results = assertSameAsRun(rules)
+      results.filter(_.error.isDefined).map(_.ruleName) shouldBe
+        Seq("err_incomparable", "err_bad_sql", "err_no_such_col_1", "err_no_such_col_2")
+      results.filter(_.ruleName.startsWith("err_no_such_col")).foreach { r =>
+        r.error.get should include(r.ruleName.stripPrefix("err_"))
+      }
+      results(1).actualValue.asInstanceOf[Double] shouldBe 27.296 +- 1e-9
+      results(5).actualValue shouldBe -1.0
+      results(7).actualValue shouldBe 100.0
+      results(11).isValid shouldBe true // its group fell back and still ran it
+    }
+  }
+
+  test("runBatched: projections, multi-column and nondeterministic rules stay unfused") {
+    withViews {
+      productsDf.limit(0).createOrReplaceTempView("empty_products")
+      val rules = Seq(
+        ValidationRule("project_empty", "", "SELECT 1 FROM empty_products", "equals", 1),
+        ValidationRule("project_rows", "", "SELECT price FROM products", "equals", 10.99),
+        ValidationRule("two_columns", "", "SELECT COUNT(*), MAX(price) FROM products", "equals", 5),
+        // Spark rejects a nondeterministic aggregate argument: an error
+        // on both paths.
+        ValidationRule("random_arg", "", "SELECT AVG(rand()) FROM products", "between", Seq(0, 1)),
+        // Analyzes, but is nondeterministic; the fixed seed lets the two
+        // paths' values be compared.
+        ValidationRule("random_seeded", "", "SELECT MAX(price) + rand(7) FROM products", "less_than", 200))
+      rules.foreach(r => withClue(r.name)(Validator.plan(spark, r).fused shouldBe None))
+      val results = assertSameAsRun(rules)
+      results(0).actualValue shouldBe (null: Any) // no row, not an aggregate's value
+      results(0).isValid shouldBe false
+      results(3).error should not be empty
+      results(4).isValid shouldBe true
     }
   }
 
