@@ -53,21 +53,83 @@ object ProfilePasses {
     * acceptable to ~16 columns); approx mode is the 100 TB path:
     * HLL++ via approx_count_distinct, single pass, no Expand. */
   def distinctCounts(df: DataFrame, cols: Seq[String], exact: Boolean = true,
-      rsd: Double = 0.01, spreadInput: Boolean = true): DataFrame = {
+      rsd: Double = 0.01): DataFrame = {
     // Exact mode plans an Expand: every input row is replicated once
     // per column before the partial aggregate, so per-input-byte CPU
     // is ~|cols|× a plain scan — worth fanning a poorly-split input
     // out (approx HLL sketches are a plain scan; leave them be).
-    // `spreadInput = false` honors a caller's as-is partitioning
-    // (ProfilerConfig.spreadInput threads through here).
     val input =
-      if (exact && spreadInput) graft.util.Partitioning.spreadIfLarge(df) else df
+      if (exact) graft.util.Partitioning.spreadIfLarge(df) else df
     val aggs = cols.map { n =>
       val key = comparable(df, n)
       if (exact) countDistinct(key).as(s"${n}_distinct")
       else approx_count_distinct(key, rsd).as(s"${n}_distinct")
     }
     input.agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Spark's cap on the grouping columns of one grouping-sets
+    * aggregate (GROUPING_SIZE_LIMIT_EXCEEDED above it). */
+  private val MaxGroupingColumns = 64
+
+  /** P3 + P9 fused, exact: every column's distinct count AND its top-1
+    * value from ONE aggregate. A grouping-sets aggregate with one
+    * single-column set per column (Catalyst plans one Expand that
+    * copies each row once per set, then one hash aggregate keyed on
+    * (value, grouping id)) counts every (column, value) group; a
+    * group-by on the column then gives the number of non-null value
+    * groups (= `countDistinct(comparable(c))`: typed grouping
+    * normalizes -0.0 and NaN exactly as distinct aggregation does) and
+    * the top-1 as `max(struct(frequency, value string))` — highest
+    * count, then greatest value string, like [[frequentValues]].
+    *
+    * A map column groups by `(to_json, cast(value as string))`: JSON is
+    * its grouping-safe rendering (see [[comparable]]) and the string
+    * cast is the value [[frequentValues]] shows. The pair splits a JSON
+    * group only where the strings differ (JSON renders timestamps to
+    * the millisecond, the string cast to the microsecond). Above
+    * [[MaxGroupingColumns]] columns the sets split into several
+    * aggregates, unioned before the per-column group-by.
+    *
+    * Output: one row per column with at least one non-null value —
+    * (column, distinct_count, value string, frequency). */
+  def distinctAndFrequent(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val chunks = cols.zipWithIndex.grouped(MaxGroupingColumns).map { chunk =>
+      val keys = chunk.map { case (n, i) =>
+        (types(n) match {
+          case _: MapType => struct(to_json(c(n)).as("json"), c(n).cast(StringType).as("shown"))
+          case _ => c(n)
+        }).as(s"k$i")
+      }
+      val ks = chunk.map { case (_, i) => col(s"k$i") }
+      // Outside its own set every key is null, so the coalesce picks
+      // the set's own value (null for the column's null group).
+      val shown = chunk.map { case (n, i) =>
+        types(n) match {
+          case _: MapType => col(s"k$i.shown")
+          case _ => col(s"k$i").cast(StringType)
+        }
+      }
+      // grouping_id() sets bit (m-1-j) for every key NOT in set j.
+      val m = chunk.size
+      val all = if (m == 64) -1L else (1L << m) - 1
+      def inSet(j: Int) = col("gid") === lit(all ^ (1L << (m - 1 - j)))
+      val column = chunk.indices.tail.foldLeft(when(inSet(0), lit(chunk.head._1))) {
+        (w, j) => w.when(inSet(j), lit(chunk(j)._1))
+      }
+      df.select(keys: _*)
+        .groupingSets(ks.map(Seq(_)), ks: _*)
+        .agg(count(lit(1)).as("frequency"), grouping_id().as("gid"))
+        .select(column.as("column"), coalesce(shown: _*).as("value"), col("frequency"))
+        .filter(col("value").isNotNull)
+    }
+    chunks.reduce(_ union _)
+      .groupBy("column")
+      .agg(count(lit(1)).as("distinct_count"),
+        max(struct(col("frequency"), col("value"))).as("top"))
+      .select(col("column"), col("distinct_count"),
+        col("top.value").as("value"), col("top.frequency").as("frequency"))
   }
 
   /** P4: duplicate-row count = number of full-row groups occurring more
@@ -130,26 +192,23 @@ object ProfilePasses {
         }
       }
       base.select(col("*") +: qCols: _*)
-    } else base.crossJoin(percentiles(df, cols, exact = false))
+    } else base.crossJoin(percentiles(df, cols))
   }
 
-  /** P5 quartiles, quarantined in their own pass: `percentile` /
-    * `percentile_approx` are TypedImperativeAggregates — putting one in
+  /** P5 approximate quartiles, quarantined in their own pass:
+    * `percentile_approx` is a TypedImperativeAggregate — putting it in
     * the fused wide agg would knock EVERY metric off WholeStageCodegen
-    * into ObjectHashAggregate, and exact percentile's final merge (a
-    * value→count map with an entry per distinct value) lands on one
-    * task. Isolated here, the scan reads only the numeric columns and
-    * the codegen'd wide agg stays codegen'd. Approx mode bounds the
-    * merge state to the sketch size — that is the 100 TB path. */
-  def percentiles(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
-    // One aggregate (= one sketch / one value-count map) per COLUMN,
-    // asked for all three quartiles at once — the per-quantile form
-    // builds three identical sketches per column, tripling both the
-    // per-row update cost and the merge state for no extra information.
+    * into ObjectHashAggregate. Isolated here, the scan reads only the
+    * numeric columns and the codegen'd wide agg stays codegen'd. The
+    * sketch bounds the merge state — that is the 100 TB path; exact
+    * quartiles come from [[DistributedPercentiles]]. */
+  def percentiles(df: DataFrame, cols: Seq[String]): DataFrame = {
+    // One sketch per COLUMN, asked for all three quartiles at once —
+    // the per-quantile form builds three identical sketches per
+    // column, tripling both the per-row update cost and the merge
+    // state for no extra information.
     val aggs = cols.map { n =>
-      (if (exact) expr(s"percentile(`$n`, array(0.25D, 0.5D, 0.75D))")
-       else expr(s"percentile_approx(`$n`, array(0.25D, 0.5D, 0.75D), 10000)"))
-        .as(s"${n}_qs")
+      expr(s"percentile_approx(`$n`, array(0.25D, 0.5D, 0.75D), 10000)").as(s"${n}_qs")
     }
     val out = cols.flatMap { n =>
       Seq((1, "q1"), (2, "median"), (3, "q3")).map { case (i, alias) =>
@@ -175,8 +234,7 @@ object ProfilePasses {
     * matching is the most CPU-expensive metric in the profile, so the
     * standalone pass spreads a poorly-split input across the session's
     * cores first (no-op once the scan has enough splits);
-    * `spreadInput = false` honors a caller's as-is partitioning — the
-    * same contract as [[distinctCounts]]. */
+    * `spreadInput = false` honors a caller's as-is partitioning. */
   def textPatterns(df: DataFrame, cols: Seq[String],
       spreadInput: Boolean = true): DataFrame = {
     val aggs = cols.flatMap { n =>

@@ -19,7 +19,8 @@ import graft.types.ColumnBuckets
   *
   * `frequentValuesRowLimit` mirrors the reference's hard skip above
   * 1M rows (profile_engine.py:295-297); None (default) removes the
-  * cliff because the melt+hash-agg top-1 is cheap at any scale.
+  * cliff: exact mode's top-1 rides on the distinct-count aggregate,
+  * and approx mode's melt+hash-agg top-1 is cheap at any scale.
   *
   * The duplicate check shuffles full rows only in exact mode (needed
   * for oracle parity); otherwise — the scale path — it groups by a
@@ -76,21 +77,28 @@ final case class ProfilerConfig(
 /** End-to-end table profiler: the Spark-native replacement for
   * `sparvi.profiler.profile_table` (reference:
   * sparvi/profiler/profile_engine.py:17-454). The reference ships
-  * O(columns) sequential scalar queries to a warehouse; this collapses
-  * the whole profile into 5 Spark jobs:
+  * O(columns) sequential scalar queries to a warehouse; this runs a
+  * fixed set of passes whose number does not grow with the column
+  * count:
   *
   *   A. one wide aggregate (row count, null counts, numeric stats,
-  *      text lengths, text patterns, date stats) — single scan,
-  *      partial+final hash agg, WholeStageCodegen;
-  *   A'. distinct counts (separate agg: exact mode plans an Expand,
-  *      quarantined away from pass A; approx mode is fused-safe);
+  *      text lengths, text patterns, date stats; approx mode adds the
+  *      HLL distinct counts) — single scan, partial+final hash agg,
+  *      WholeStageCodegen;
+  *   A'. exact mode: distinct counts AND the most-frequent value of
+  *      every column from one grouping-sets aggregate (its Expand is
+  *      quarantined away from pass A);
+  *   A''. quartiles of every numeric column: exact mode one melted
+  *      rank-based pipeline, approx mode one percentile_approx agg;
   *   B. duplicate full-row group count (one shuffle);
-  *   C. most-frequent value for all columns (melt + hash agg + top-1);
+  *   C. approx mode: most-frequent value of the columns that are not
+  *      near-unique (melt + hash agg + top-1);
   *   D. 3-sigma outliers for all numeric columns in one filtered scan,
   *      reusing pass-A means/stddevs as literals;
-  *   E. (optional) sample rows via CollectLimit.
+  *   E. (optional) sample rows via CollectLimit;
+  *   F. nested-column stats (arrays, maps, structs).
   *
-  * Only scalar aggregate rows ever reach the driver.
+  * Only aggregate rows (at most one per column) reach the driver.
   */
 object Profiler {
 
@@ -156,9 +164,10 @@ object Profiler {
     // overlapping lets the next pass's tasks back-fill executor slots
     // freed by the current pass's stragglers. Phase 1 holds the
     // passes with no cross-pass inputs (A, A', A'', B, F, E); phase 2
-    // (C, D) consumes pass-A statistics. Results are identical — only
-    // the job-submission order changes. Per-pass onPassTiming walls
-    // now OVERLAP (their sum can exceed the profile's wall).
+    // (D, and approx mode's C) consumes pass-A statistics. Results are
+    // identical — only the job-submission order changes. Per-pass
+    // onPassTiming walls now OVERLAP (their sum can exceed the
+    // profile's wall).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6, (r: Runnable) => {
       val t = new Thread(r, "profiler-pass")
       t.setDaemon(true)
@@ -174,15 +183,16 @@ object Profiler {
     val fA = Future(timed("A_fused_agg")(fusedWideAgg(df, b, cfg).head()))
 
     // ---- Pass A'': percentiles, quarantined away from pass A (their
-    // aggregate would knock it off WholeStageCodegen). Exact mode uses
-    // the fully distributed rank-based algorithm — Spark's built-in
-    // exact percentile merges a per-distinct-value map on ONE task;
-    // approx mode is the bounded-sketch percentile_approx pass.
+    // aggregate would knock it off WholeStageCodegen). Exact mode runs
+    // ONE melted rank-based pipeline over every numeric column (2 jobs
+    // at any width) — Spark's built-in exact percentile merges a
+    // per-distinct-value map on ONE task; approx mode is the
+    // bounded-sketch percentile_approx pass.
     val fA2 = Future(timed("A2_percentiles") {
       if (b.numeric.isEmpty) Map.empty[String, Seq[Option[Double]]]
-      else if (cfg.exact) DistributedPercentiles.quartiles(df, b.numeric)
+      else if (cfg.exact) DistributedPercentiles.ofAll(df, b.numeric, Seq(0.25, 0.5, 0.75))
       else {
-        val r = ProfilePasses.percentiles(df, b.numeric, exact = false).head()
+        val r = ProfilePasses.percentiles(df, b.numeric).head()
         b.numeric.map { n =>
           n -> Seq("q1", "median", "q3").map { a =>
             val i = r.fieldIndex(s"${n}_$a")
@@ -192,15 +202,15 @@ object Profiler {
       }
     })
 
-    // ---- Pass A': distinct counts. Exact mode plans an Expand (one
-    // row copy per distinct aggregate), so it runs quarantined in its
-    // own pass; approx mode's HLL sketches are plain declarative
-    // aggregates and were FUSED into pass A above — no extra scan.
+    // ---- Pass A': exact distinct counts AND frequent values, one
+    // grouping-sets aggregate (its Expand copies each row once per
+    // column, so it runs quarantined in its own pass). Approx mode's
+    // HLL sketches are plain declarative aggregates FUSED into pass A
+    // above — no extra scan — and its frequent values run in phase 2.
     val fA1 =
-      if (cfg.exact)
+      if (cfg.exact && b.all.nonEmpty)
         Some(Future(timed("A1_distinct")(
-          ProfilePasses.distinctCounts(df, b.all, exact = true,
-            spreadInput = cfg.spreadInput).head())))
+          ProfilePasses.distinctAndFrequent(df, b.all).collect())))
       else None
 
     // ---- Pass B: duplicates. The digest projection is the default
@@ -273,11 +283,21 @@ object Profiler {
     def getPct(colName: String, idx: Int): Option[Double] =
       quartileMap.get(colName).flatMap(_(idx))
 
-    val distRow = fA1.map(Await.result(_, Duration.Inf)).getOrElse(row)
-    val distinctCounts = b.all.map { n =>
-      n -> (if (distRow.isNullAt(distRow.fieldIndex(s"${n}_distinct"))) 0L
-            else distRow.getLong(distRow.fieldIndex(s"${n}_distinct")))
-    }.toMap
+    val fieldTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    def frequentValue(colName: String, value: String, frequency: Long) =
+      FrequentValue(
+        value = parseBack(value, fieldTypes.get(colName)),
+        frequency = frequency,
+        percentage = round2(frequency * 100.0 / rowCount))
+    // Exact mode: one row per column with a non-null value; a column
+    // absent from the rows has no values (0 distinct, no top-1).
+    val fused = fA1.map(f => Await.result(f, Duration.Inf).map { r =>
+      r.getString(0) -> (r.getLong(1), r.getString(2), r.getLong(3))
+    }.toMap)
+    val distinctCounts: Map[String, Long] = fused match {
+      case Some(rows) => b.all.map(n => n -> rows.get(n).fold(0L)(_._1)).toMap
+      case None => b.all.map(n => n -> getL(s"${n}_distinct")).toMap
+    }
 
     val completeness = b.all.map { n =>
       val nulls = getL(s"${n}_nulls")
@@ -321,30 +341,30 @@ object Profiler {
     }.toMap
 
     // ---- Phase 2: passes that consume pass-A statistics.
-    // ---- Pass C: frequent values (reference skips above its row
-    // limit; we only skip if configured for parity testing). The melt
-    // stringifies values for a uniform pair schema; the top-1 is
-    // converted back to the column's native type driver-side so the
-    // profile JSON carries typed values like the reference does.
-    val fieldTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    // Scale mode prunes near-unique columns from the melt using the
-    // distinct counts already in hand — their top-1 occurs ~once and
-    // would cost a shuffle of nearly every value to compute.
-    val fvCols =
-      if (cfg.exact || rowCount == 0) b.all
-      else b.all.filter(n =>
-        distinctCounts(n) <= rowCount * cfg.frequentValuesMaxDistinctShare)
-    val fC = Future(timed("C_frequent_values") {
-      if (cfg.frequentValuesRowLimit.exists(rowCount > _) || fvCols.isEmpty)
-        Map.empty[String, FrequentValue]
-      else ProfilePasses.frequentValues(df, fvCols, rowCount).collect().map { r =>
-        val colName = r.getString(r.fieldIndex("column"))
-        colName -> FrequentValue(
-          value = parseBack(r.getString(r.fieldIndex("value")), fieldTypes.get(colName)),
-          frequency = r.getLong(r.fieldIndex("frequency")),
-          percentage = round2(r.getDouble(r.fieldIndex("percentage"))))
-      }.toMap
-    })
+    // ---- Frequent values (reference skips above its row limit; we
+    // only skip if configured for parity testing). Both paths
+    // stringify the top-1 value; it is converted back to the column's
+    // native type driver-side so the profile JSON carries typed values
+    // like the reference does. Exact mode already has them from pass
+    // A'. Approx mode runs pass C, a melt that prunes near-unique
+    // columns using the distinct counts already in hand — their top-1
+    // occurs ~once and would cost a shuffle of nearly every value.
+    val skipFrequent = cfg.frequentValuesRowLimit.exists(rowCount > _)
+    val fC = fused match {
+      case Some(rows) => Future.successful(
+        if (skipFrequent) Map.empty[String, FrequentValue]
+        else rows.map { case (n, (_, v, f)) => n -> frequentValue(n, v, f) })
+      case None => Future(timed("C_frequent_values") {
+        val fvCols = if (rowCount == 0) b.all else b.all.filter(n =>
+          distinctCounts(n) <= rowCount * cfg.frequentValuesMaxDistinctShare)
+        if (skipFrequent || fvCols.isEmpty) Map.empty[String, FrequentValue]
+        else ProfilePasses.frequentValues(df, fvCols, rowCount).collect().map { r =>
+          val colName = r.getString(r.fieldIndex("column"))
+          colName -> frequentValue(colName, r.getString(r.fieldIndex("value")),
+            r.getLong(r.fieldIndex("frequency")))
+        }.toMap
+      })
+    }
 
     // ---- Pass D: outliers, means/stddevs reused from pass A.
     val statPairs = b.numeric.flatMap { n =>
@@ -424,13 +444,15 @@ object Profiler {
     * text patterns + date stats in a single Aggregate (one scan) —
     * plus, in approx mode, the per-column HLL distinct sketches
     * (declarative, fused-safe; one fewer full scan per profile).
-    * Percentiles are deliberately NOT here — their
-    * TypedImperativeAggregate would force the whole pass off
-    * WholeStageCodegen into ObjectHashAggregate; they run in their own
-    * quarantined pass (ProfilePasses.percentiles). Exact
-    * countDistinct is also excluded: its Expand would multiply every
-    * input row once per distinct aggregate. Every expression below is
-    * a codegen'd declarative aggregate. */
+    * Percentiles are deliberately NOT here — approx mode's
+    * percentile_approx is a TypedImperativeAggregate that would force
+    * the whole pass off WholeStageCodegen into ObjectHashAggregate, so
+    * it runs in its own quarantined pass (ProfilePasses.percentiles);
+    * exact mode's rank-based pipeline (DistributedPercentiles.ofAll)
+    * is its own jobs anyway. Exact distinct counts are also excluded:
+    * their Expand would multiply every input row once per column
+    * (ProfilePasses.distinctAndFrequent). Every expression below is a
+    * codegen'd declarative aggregate. */
   private def fusedWideAgg(df: DataFrame, b: ColumnBuckets.Buckets,
       cfg: ProfilerConfig): DataFrame = {
     import org.apache.spark.sql.functions._

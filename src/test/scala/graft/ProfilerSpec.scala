@@ -3,7 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.profiler.{Profiler, ProfilerConfig}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.model.TableProfile
+import graft.profiler.{DistributedPercentiles, ProfilePasses, Profiler, ProfilerConfig}
 
 /** Pins the reference's concrete profiler assertions
   * (reference: tests/test_profiler.py:8-32) against the A1 `employees`
@@ -460,5 +465,178 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
     out(0).getAs[Double]("median") shouldBe 2.0
     out(1).isNullAt(out(1).fieldIndex("median")) shouldBe true
     out(1).getAs[Long]("n_outliers") shouldBe 0L
+  }
+
+  /** The pre-fusion exact semantics, one query per column: the old
+    * distinct pass's `countDistinct` of the grouping-safe key (JSON for
+    * a map) and a typed GROUP BY's top-1 (highest count, then greatest
+    * value string; a map shows its string cast). */
+  private def expectedDistinctAndTop(df: DataFrame, n: String): (Long, Option[(String, Long)]) = {
+    val c = col(s"`$n`")
+    val isMap = df.schema(n).dataType.isInstanceOf[MapType]
+    val key = if (isMap) to_json(c) else c
+    val distinct = df.agg(countDistinct(key)).head().getLong(0)
+    val groups = if (isMap) Seq(key.as("k"), c.cast(StringType).as("shown")) else Seq(key.as("k"))
+    val shown = if (isMap) col("shown") else col("k").cast(StringType)
+    val top = df.filter(c.isNotNull).groupBy(groups: _*).agg(count(lit(1)).as("f"))
+      .select(shown.as("v"), col("f"))
+      .orderBy(col("f").desc, col("v").desc).limit(1)
+      .collect().headOption.map(r => (r.getString(0), r.getLong(1)))
+    (distinct, top)
+  }
+
+  /** Profiles `df` exactly and checks every column's distinct count and
+    * top-1 against [[expectedDistinctAndTop]], through both the fused
+    * pass's raw rows (the value strings) and the profile. */
+  private def checkFusedParity(df: DataFrame,
+      cfg: ProfilerConfig = ProfilerConfig(persist = false)): TableProfile = {
+    val p = Profiler.profile(df, "t", cfg)
+    val fused = ProfilePasses.distinctAndFrequent(df, df.columns.toSeq).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), (r.getString(2), r.getLong(3)))).toMap
+    p.completeness.keySet shouldBe df.columns.toSet
+    for (n <- df.columns) withClue(s"column $n: ") {
+      val (distinct, top) = expectedDistinctAndTop(df, n)
+      p.completeness(n).distinctCount shouldBe distinct
+      fused.get(n).fold(0L)(_._1) shouldBe distinct
+      fused.get(n).map(_._2) shouldBe top
+      p.frequentValues.get(n).map(_.frequency) shouldBe top.map(_._2)
+    }
+    p
+  }
+
+  private val typedSchema = StructType(Seq(
+    StructField("s", StringType),
+    StructField("n", IntegerType),
+    StructField("d", DoubleType),
+    StructField("big", LongType),
+    StructField("m", MapType(StringType, IntegerType)),
+    StructField("dt", DateType),
+    StructField("ts", TimestampType),
+    StructField("nul", StringType)))
+
+  private lazy val typedDf: DataFrame = {
+    val two53 = 1L << 53
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    spark.createDataFrame(java.util.Arrays.asList(
+      Row("b", 9, -0.0, two53, Map("a" -> 1), d("2020-01-01"), ts("2020-01-01 00:00:00"), null),
+      Row("a", 10, 0.0, two53 + 1, Map("a" -> 1), d("2020-01-01"), ts("2020-01-01 00:00:00.5"), null),
+      Row("b", 9, 0.0, two53 + 1, Map("b" -> 2, "a" -> 1), d("2020-01-02"), ts("2020-01-01 00:00:00.5"), null),
+      Row("a", 10, Double.NaN, two53 + 3, null, null, null, null),
+      Row("c", null, Double.NaN, 5L, Map("b" -> 2), d("2020-01-02"), ts("2021-06-30 12:00:00"), null),
+      Row(null, 11, 1.5, null, Map("a" -> 1), d("2020-01-03"), ts("2021-06-30 12:00:00"), null)),
+      typedSchema)
+  }
+
+  test("fused distinct/frequent pass matches countDistinct and per-column GROUP BY top-1") {
+    val p = checkFusedParity(typedDf)
+    // Ties go to the greatest value STRING: "b" over "a", and 9 over 10.
+    p.frequentValues("s").value shouldBe "b"
+    p.frequentValues("n").value shouldBe 9
+    // -0.0 and 0.0 are one typed group (shown as 0.0); NaNs are another.
+    p.completeness("d").distinctCount shouldBe 3L
+    p.frequentValues("d").frequency shouldBe 3L
+    java.lang.Double.doubleToRawLongBits(
+      p.frequentValues("d").value.asInstanceOf[Double]) shouldBe 0L
+    // Longs above 2^53 group exactly, not as doubles.
+    p.completeness("big").distinctCount shouldBe 4L
+    p.frequentValues("big").value shouldBe ((1L << 53) + 1)
+    // A map groups by its JSON but shows its string cast.
+    p.completeness("m").distinctCount shouldBe 3L
+    p.frequentValues("m").value shouldBe "{a -> 1}"
+    p.frequentValues("m").frequency shouldBe 3L
+    p.completeness("dt").distinctCount shouldBe 3L
+    p.completeness("ts").distinctCount shouldBe 3L
+    p.frequentValues("ts").frequency shouldBe 2L
+    p.frequentValues("s").percentage shouldBe 33.33
+    // The all-null column has no distinct value and no top-1.
+    p.completeness("nul").distinctCount shouldBe 0L
+    p.frequentValues.get("nul") shouldBe None
+  }
+
+  test("exact profile quartiles come from one melted pipeline, equal to per-column ones") {
+    val p = Profiler.profile(typedDf, "t", ProfilerConfig(persist = false))
+    for (n <- Seq("n", "d", "big")) withClue(s"column $n: ") {
+      val q = p.numericStats(n)
+      Seq(q.q1, q.median, q.q3).map(_.toString) shouldBe
+        DistributedPercentiles.of(typedDf, n, Seq(0.25, 0.5, 0.75)).map(_.toString)
+    }
+  }
+
+  test("fused pass on an empty frame: no distinct values, no frequent values") {
+    val p = checkFusedParity(typedDf.filter(lit(false)))
+    p.rowCount shouldBe 0L
+    p.completeness.values.map(_.distinctCount).toSet shouldBe Set(0L)
+    p.frequentValues shouldBe empty
+  }
+
+  test("fused pass splits more than 64 columns into several grouping-sets aggregates") {
+    val df = spark.range(120).select((0 until 70).map { j =>
+      ((col("id") * (j + 1)) % (j + 3)).as(s"c$j")
+    }: _*)
+    val p = checkFusedParity(df)
+    p.completeness("c68").distinctCount shouldBe 71L
+    p.completeness("c0").distinctCount shouldBe 3L
+  }
+
+  test("frequentValuesRowLimit empties the frequent values but keeps exact distinct counts") {
+    val p = Profiler.profile(typedDf, "t",
+      ProfilerConfig(persist = false, frequentValuesRowLimit = Some(5L)))
+    p.frequentValues shouldBe empty
+    p.completeness("big").distinctCount shouldBe 4L
+    Profiler.profile(typedDf, "t", ProfilerConfig(persist = false,
+      frequentValuesRowLimit = Some(6L))).frequentValues should not be empty
+  }
+
+  test("exact profile reports the fused passes under A1_distinct and A2_percentiles") {
+    val passes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    Profiler.profile(typedDf, "t", ProfilerConfig(persist = false,
+      onPassTiming = (pass, _) => { passes.add(pass); () }))
+    val names = passes.toArray.toSet
+    names should contain allOf ("A1_distinct", "A2_percentiles")
+    names should not contain "C_frequent_values"
+  }
+
+  /** Spark jobs that `body` submits, counted by a listener on a job
+    * group that the body's worker threads inherit. A marker job after
+    * the body flushes the asynchronous listener bus up to it. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-guard-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count guard")
+      body
+      sc.setJobGroup(s"$group-marker", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("exact profile job count does not grow with the number of numeric columns") {
+    def frame(numeric: Int): DataFrame = spark.range(200).select(
+      (col("id") % 7).cast(StringType).as("s") +:
+        (1 to numeric).map(j => ((col("id") * j) % 31 + j * 0.5).as(s"x$j")): _*)
+    def jobs(numeric: Int) = jobsOf {
+      Profiler.profile(frame(numeric), "t", ProfilerConfig(persist = false)); ()
+    }
+    val two = jobs(2)
+    two should be > 0
+    jobs(6) shouldBe two
   }
 }
