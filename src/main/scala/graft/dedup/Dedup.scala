@@ -104,9 +104,13 @@ object Dedup {
       case other => throw new IllegalArgumentException(
         s"unknown signatureMode: $other (expected k-hash or oph)")
     }
-    shingleHashes(df, idCol, textCol, shingleSize)
+    // The signature is null exactly when the text is: ShingleHashes
+    // gives non-null text at least one gram. Filtering the text, not
+    // the signature, keeps the filter that Catalyst pushes below
+    // shingleHashes' spread from computing every signature a second
+    // time on the one task before the spread.
+    shingleHashes(df.filter(col(textCol).isNotNull), idCol, textCol, shingleSize)
       .select(col("id"), sig.as("sig"))
-      .filter(col("sig").isNotNull)
   }
 
   /** LSH band keys over a BOUND signature attribute: the signature is

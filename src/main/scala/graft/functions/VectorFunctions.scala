@@ -49,6 +49,11 @@ object VectorFunctions {
   def shingleHashes(normText: Column, n: Int): Column =
     ColumnBridge.column(ShingleHashes(ColumnBridge.expression(normText), n))
 
+  /** All character n-grams in position order, in one pass over the
+    * code points. See [[CharNgrams]]. */
+  def charNgrams(text: Column, n: Int): Column =
+    ColumnBridge.column(CharNgrams(ColumnBridge.expression(text), n))
+
   /** Positional (non-distinct) word n-gram shingle hashes — array
     * index = 0-based start word. See [[ShingleHashStarts]]. */
   def shingleHashStarts(normText: Column, n: Int): Column =

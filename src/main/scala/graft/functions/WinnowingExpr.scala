@@ -97,16 +97,8 @@ case class WinnowingMins(child: Expression, k: Int, w: Int, hashMode: String)
     val bytes = t.getBytes
     val nChars = t.numChars()
     // Character index -> byte offset (UTF-8 grams are by character,
-    // matching substr; one walk over the bytes).
-    val offs = new Array[Int](nChars + 1)
-    var ci = 0
-    var bi = 0
-    while (ci < nChars) {
-      offs(ci) = bi
-      bi += UTF8String.numBytesForFirstByte(bytes(bi))
-      ci += 1
-    }
-    offs(nChars) = bytes.length
+    // matching substr).
+    val offs = CodePoints.offsets(bytes, nChars)
     val n = math.max(nChars - k + 1, 1)
 
     if (isMd5) {

@@ -844,13 +844,11 @@ object TextAnalysis {
   }
 
   /** All character n-grams of a text column in position order, as
-    * array<string>; texts shorter than n yield an empty array (guarded
-    * — an unguarded `sequence(1, len-n+1)` would DESCEND for short
-    * texts and emit reversed out-of-range grams). */
+    * array<string>; null text and texts shorter than n yield an empty
+    * array. Positions are code points, as in `length`/`substr`. One
+    * native pass per document ([[graft.functions.CharNgrams]]). */
   def charNgrams(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      transform(sequence(lit(1), length(text) - (n - 1)), i => text.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
+    graft.functions.VectorFunctions.charNgrams(text, n)
 
   /** Per-source corpus mixture report — the dashboard a mixture /
     * curation decision reads before weighting sources (feeds

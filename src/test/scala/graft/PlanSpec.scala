@@ -157,6 +157,33 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkTestBase {
     plan should not include "Generate"
   }
 
+  test("minhash signatures are computed once, after the spread of a one-split input") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.functions.{MinHashSignature, OnePermSignature}
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("minhash-spread").toString
+    ((1 to 50).map(i => (i.toLong, s"doc number $i of the corpus")) :+ ((51L, null: String)))
+      .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    for (mode <- Seq("k-hash", "oph")) withClue(s"$mode: ") {
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", numHashes = 16, signatureMode = mode)
+      val spreads = sigs.queryExecution.sparkPlan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      }
+      spreads should not be empty
+      spreads.foreach { e =>
+        e.child.exists(_.expressions.exists(_.exists {
+          case _: MinHashSignature | _: OnePermSignature => true
+          case _ => false
+        })) shouldBe false
+      }
+      // The null-text document has no signature; every other one has.
+      sigs.count() shouldBe 50
+    }
+  }
+
   test("simhash sketching is map-side: no exchange, no aggregate in the plan") {
     val s = spark
     import s.implicits._

@@ -597,37 +597,6 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
     names should not contain "C_frequent_values"
   }
 
-  /** Spark jobs that `body` submits, counted by a listener on a job
-    * group that the body's worker threads inherit. A marker job after
-    * the body flushes the asynchronous listener bus up to it. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"job-guard-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job-count guard")
-      body
-      sc.setJobGroup(s"$group-marker", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      marker.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("exact profile job count does not grow with the number of numeric columns") {
     def frame(numeric: Int): DataFrame = spark.range(200).select(
       (col("id") % 7).cast(StringType).as("s") +:

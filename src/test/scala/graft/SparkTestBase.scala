@@ -31,6 +31,37 @@ trait SparkTestBase { self: Suite =>
     ).toDF("id", "name", "age", "salary", "department")
   }
 
+  /** Spark jobs that `body` submits, counted by a listener on a job
+    * group that the body's worker threads inherit. A marker job after
+    * the body flushes the asynchronous listener bus up to it. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-guard-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job-count guard")
+      body
+      sc.setJobGroup(s"$group-marker", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not flush")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** A2 golden table: 5 rows, one negative price (Product E). */
   def productsDf: DataFrame = {
     val s = spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Row, functions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -344,6 +344,24 @@ class TextAnalysisSpec extends AnyFunSuite with Matchers with SparkTestBase {
       TextAnalysis.charNgrams(col("text"), 5).as("g5")).head()
     r.getSeq[String](0) shouldBe Seq("ab", "bc", "cd")
     r.getSeq[String](1) shouldBe Seq.empty
+  }
+
+  test("charNgrams equals the substr column form, by code point, null and short text included") {
+    val texts = Seq("hello world", "café au lait", "中文字符测试", "ab😀cd😀", "é", "", null, "ab")
+    // null reaches the column form as null length: its guard then takes
+    // the empty branch too.
+    def columnForm(text: org.apache.spark.sql.Column, n: Int) =
+      when(functions.length(text) >= n,
+        transform(sequence(lit(1), functions.length(text) - (n - 1)), i => text.substr(i, lit(n))))
+        .otherwise(array().cast("array<string>"))
+    val df = docs(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }: _*)
+    for (n <- Seq(1, 2, 3)) withClue(s"n=$n: ") {
+      val rows = df.orderBy("doc_id").select(
+        TextAnalysis.charNgrams(col("text"), n), columnForm(col("text"), n)).collect()
+      rows.foreach(r => r.getSeq[String](0) shouldBe r.getSeq[String](1))
+    }
+    df.where(col("doc_id") === 3).select(TextAnalysis.charNgrams(col("text"), 3)).head()
+      .getSeq[String](0) shouldBe Seq("ab😀", "b😀c", "😀cd", "cd😀")
   }
 
   test("lmScoreFromCounts rejects a frame that is not charNgramCounts output") {

@@ -225,6 +225,16 @@ class ValidatorSpec extends AnyFunSuite with Matchers with SparkTestBase {
     fusableCountWhere(rule("SELECT MAX(price) FROM products")) shouldBe None
   }
 
+  /** Where runBatched answers a rule: "round1 <table>", "round2
+    * <table>" (fused into that table's round-2 aggregate), "round2
+    * alone" (run alone with its round-1 values in place) or "alone". */
+  private def routeOf(rule: ValidationRule): String =
+    Validator.analyze(spark, Validator.plan(spark, rule)).route match {
+      case Validator.Round1(table, _) => s"round1 $table"
+      case Validator.Round2(_, _, into) => s"round2 ${into.getOrElse("alone")}"
+      case _ => "alone"
+    }
+
   /** runBatched must report exactly run()'s result for every rule, in
     * order: same value, same verdict, and an error on the same rules. */
   private def assertSameAsRun(rules: Seq[ValidationRule]): Seq[ValidationResult] = {
@@ -301,8 +311,16 @@ class ValidatorSpec extends AnyFunSuite with Matchers with SparkTestBase {
         ValidationRule("cw_employees", "", "SELECT COUNT(*) FROM employees", "equals", 10))
       val fusedRules = Set("cw_negative", "agg_avg", "agg_null_rate", "dup", "err_incomparable",
         "cw_employees", "err_no_such_col_2")
-      rules.map(r => r.name -> Validator.plan(spark, r).fused.isDefined)
-        .foreach { case (n, f) => withClue(n)(f shouldBe fusedRules(n)) }
+      rules.foreach { r =>
+        withClue(r.name) {
+          val table = if (r.query.contains("employees")) "employees" else "products"
+          routeOf(r) shouldBe (
+            if (fusedRules(r.name)) s"round1 $table"
+            // Its subquery's AVG comes from round 1; it then fuses into round 2.
+            else if (r.name == "sub_above_avg") "round2 products"
+            else "alone")
+        }
+      }
 
       val results = assertSameAsRun(rules)
       results.filter(_.error.isDefined).map(_.ruleName) shouldBe
@@ -330,12 +348,110 @@ class ValidatorSpec extends AnyFunSuite with Matchers with SparkTestBase {
         // Analyzes, but is nondeterministic; the fixed seed lets the two
         // paths' values be compared.
         ValidationRule("random_seeded", "", "SELECT MAX(price) + rand(7) FROM products", "less_than", 200))
-      rules.foreach(r => withClue(r.name)(Validator.plan(spark, r).fused shouldBe None))
+      rules.foreach(r => withClue(r.name)(routeOf(r) shouldBe "alone"))
       val results = assertSameAsRun(rules)
       results(0).actualValue shouldBe (null: Any) // no row, not an aggregate's value
       results(0).isValid shouldBe false
       results(3).error should not be empty
       results(4).isValid shouldBe true
+    }
+  }
+
+  test("two rounds: D10 outliers and D3 row growth on empty, one-row and decimal tables") {
+    withViews {
+      val s = spark
+      import s.implicits._
+      productsDf.limit(0).createOrReplaceTempView("no_products")
+      productsDf.where($"product_id" === 1).createOrReplaceTempView("one_product")
+      productsDf.select($"product_id", $"price".cast("decimal(10,2)").as("amount"))
+        .createOrReplaceTempView("priced")
+      val tables = Seq("no_products", "one_product", "priced", "products")
+      val rules = tables.flatMap(t => DefaultValidations.generate(spark.table(t).schema, t))
+        .filter(r => r.name.endsWith("_outliers") || r.name.endsWith("_row_growth")) :+
+        // The literal keeps the inner's decimal(14,6): a double would
+        // change typeof and the value's scale.
+        ValidationRule("decimal_avg_type", "", "SELECT typeof((SELECT AVG(amount) FROM priced))",
+          "equals", "decimal(14,6)")
+      rules.count(_.name.endsWith("_outliers")) shouldBe 8
+      rules.foreach { r =>
+        withClue(r.name) {
+          val table = tables.find(t => r.query.contains(s"FROM $t")).get
+          routeOf(r) shouldBe (if (r.name.endsWith("_outliers")) s"round2 $table" else "round2 alone")
+        }
+      }
+      val results = assertSameAsRun(rules)
+      results.filter(_.error.isDefined) shouldBe empty
+      results.last.isValid shouldBe true
+      // One-row table: STDDEV is null, so no row is an outlier.
+      results.find(_.ruleName == "check_price_outliers").get.actualValue shouldBe 0L
+      // D3 reads only round-1 counts: with those known it needs no job.
+      val growth = rules.filter(_.name.endsWith("_row_growth"))
+      val d3Jobs = jobsOf { Validator.runBatched(spark, growth); () }
+      val countJobs = jobsOf {
+        Validator.runBatched(spark, tables.map(t => ValidationRule(t, "", s"SELECT COUNT(*) FROM $t", "equals", 0)))
+        ()
+      }
+      d3Jobs shouldBe countJobs
+    }
+  }
+
+  test("two rounds: an inner scalar over another table fuses into the outer table's round 2") {
+    withViews {
+      val rules = Seq(
+        ValidationRule("rich", "",
+          "SELECT COUNT(*) FROM employees WHERE salary > (SELECT MAX(price) * 1000 FROM products)",
+          "equals", 3),
+        ValidationRule("rich_and_old", "",
+          """SELECT COUNT(*) FROM employees WHERE salary > (SELECT MAX(price) * 1000 FROM products)
+            |AND age > (SELECT AVG(age) FROM employees)""".stripMargin, "equals", 3),
+        ValidationRule("cw", "", "SELECT COUNT(*) FROM employees WHERE age IS NULL", "equals", 2))
+      rules.map(routeOf) shouldBe Seq("round2 employees", "round2 employees", "round1 employees")
+      val results = assertSameAsRun(rules)
+      results.map(_.actualValue) shouldBe Seq(3L, 3L, 2L)
+      results.forall(_.isValid) shouldBe true
+    }
+  }
+
+  test("two rounds: correlated and nondeterministic inners stay unfused") {
+    withViews {
+      val rules = Seq(
+        ValidationRule("correlated", "",
+          """SELECT COUNT(*) FROM products p
+            |WHERE price > (SELECT AVG(price) FROM products q WHERE q.category = p.category)""".stripMargin,
+          "equals", 2),
+        ValidationRule("random_inner", "",
+          "SELECT COUNT(*) FROM products WHERE price > (SELECT AVG(price) + rand(7) FROM products)",
+          "less_than", 5),
+        ValidationRule("grouped_inner", "",
+          "SELECT COUNT(*) FROM products, (SELECT category, AVG(price) AS a FROM products GROUP BY category) s",
+          "equals", 15),
+        ValidationRule("limited_inner", "",
+          "SELECT COUNT(*) FROM products WHERE price > (SELECT price FROM products LIMIT 1)",
+          "equals", 1))
+      rules.foreach(r => withClue(r.name)(routeOf(r) shouldBe "alone"))
+      val results = assertSameAsRun(rules)
+      results.filter(_.error.isDefined) shouldBe empty
+    }
+  }
+
+  test("two rounds: a failing inner errors only its own rule") {
+    withViews {
+      // Under ANSI mode the cast fails at run time, so the analyzed rule
+      // fuses and its table's round-1 aggregate fails.
+      val rules = Seq(
+        ValidationRule("bad_inner", "",
+          "SELECT COUNT(*) FROM products WHERE price > (SELECT AVG(CAST(name AS INT)) FROM products)",
+          "equals", 0),
+        ValidationRule("cw", "", "SELECT COUNT(*) FROM products WHERE price < 0", "equals", 1),
+        ValidationRule("good_inner", "",
+          "SELECT COUNT(*) FROM products WHERE price > (SELECT AVG(price) FROM products)", "equals", 1),
+        ValidationRule("other_table", "",
+          "SELECT COUNT(*) FROM employees WHERE age > (SELECT AVG(age) FROM employees)", "equals", 4)) ++
+        DefaultValidations.generate(productsDf.schema, "products").filter(_.name.endsWith("_outliers"))
+      withClue("bad_inner: ")(routeOf(rules.head) shouldBe "round2 products")
+      val results = assertSameAsRun(rules)
+      results.filter(_.error.isDefined).map(_.ruleName) shouldBe Seq("bad_inner")
+      results.tail.forall(_.isValid) shouldBe true
     }
   }
 

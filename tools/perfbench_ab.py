@@ -3,7 +3,7 @@
 working tree.
 
     python3 tools/perfbench_ab.py --parent <rev> --workload <name> \\
-        --pairs 10 --seeds 101-110 [--workdir DIR] [--out ab.json]
+        --pairs 10 --seeds 101-110 [--trace-seed N] [--workdir DIR] [--out ab.json]
 
 The parent revision is extracted with `git archive` into a temporary
 directory under --workdir (no worktree is registered in the repository).
@@ -19,6 +19,12 @@ medians are further apart, in the better direction, than the parent's
 interquartile range. It
 also prints each side's failed share of calls and whether the first call's
 output digest agreed on every seed.
+
+With --trace-seed N, each side also makes one traced run (`--trace 1`) on
+seed N after the pairs, and the per-layer metrics are printed side by side:
+first the counters that repeat exactly for the same code and seed
+(`perfbench/metrics.py`), then the timings of that single run, which are
+one sample each and carry no claim. `--pairs 0` makes only the traced runs.
 """
 
 import argparse
@@ -32,6 +38,9 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 RUN_SECONDS = 6
+
+sys.path.insert(0, str(ROOT / "perfbench"))
+import metrics as perf_metrics  # noqa: E402  (perfbench/metrics.py)
 
 
 def parse_seeds(text):
@@ -58,11 +67,11 @@ def build(side_root):
                    stdout=subprocess.DEVNULL)
 
 
-def run_once(side_root, workload, seed):
-    """One untraced benchmark run: (metrics, failed share, first-call digest)."""
+def run_once(side_root, workload, seed, trace=0):
+    """One benchmark run: (metrics, failed share, first-call digest)."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-         "--seconds", str(RUN_SECONDS), "--trace", "0"],
+         "--seconds", str(RUN_SECONDS), "--trace", str(trace)],
         cwd=side_root, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode not in (0, 1) or not lines:
@@ -101,11 +110,16 @@ def main():
     ap.add_argument("--parent", required=True, help="git revision of the parent side")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seeds", required=True, help="one seed per pair: 101-110 or 5,9,12")
+    ap.add_argument("--seeds", default="", help="one seed per pair: 101-110 or 5,9,12")
+    ap.add_argument("--trace-seed", type=int, default=None,
+                    help="also make one traced run per side on this seed and print "
+                         "the per-layer metrics side by side")
     ap.add_argument("--workdir", default=None, help="where the parent tree is extracted")
     ap.add_argument("--out", default=None, help="also write the summary here as JSON")
     a = ap.parse_args()
-    seeds = parse_seeds(a.seeds)
+    seeds = parse_seeds(a.seeds) if a.seeds else []
+    if a.pairs == 0 and a.trace_seed is None:
+        raise SystemExit("nothing to run: --pairs 0 without --trace-seed")
     if len(seeds) < a.pairs:
         raise SystemExit(f"{a.pairs} pairs need {a.pairs} seeds, got {len(seeds)}")
     seeds = seeds[:a.pairs]
@@ -125,8 +139,15 @@ def main():
             p, c = runs["parent"][-1][0], runs["change"][-1][0]
             print(f"pair {i + 1}/{len(seeds)} seed={seed} first={order[0]}  call_s.p50 "
                   f"parent {p['call_s.p50']:.3f} change {c['call_s.p50']:.3f}", flush=True)
+        traced = {side: run_once(sides[side], a.workload, a.trace_seed, trace=1)[0]
+                  for side in sides} if a.trace_seed is not None else None
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+    if traced is not None:
+        print_traced(a.workload, a.trace_seed, spec, traced)
+    if not seeds:
+        return 0
 
     summary = {
         "workload": a.workload, "parent": a.parent, "seeds": seeds,
@@ -154,9 +175,30 @@ def main():
     print(f"failed_frac max: parent {summary['failed_frac']['parent']:.3g}, "
           f"change {summary['failed_frac']['change']:.3g}")
     print(f"first-call digest equal on every seed: {summary['same_first_call_digest']}")
+    if traced is not None:
+        summary["traced"] = {"seed": a.trace_seed, **traced}
     if a.out:
         Path(a.out).write_text(json.dumps(summary, indent=1, sort_keys=True) + "\n")
     return 0
+
+
+def print_traced(workload, seed, spec, traced):
+    """The per-layer metrics of one traced run per side, exact counters first."""
+    exact = perf_metrics.exact(workload)
+    timings = [m["name"] for m in spec["per_layer"] if m["name"] not in exact]
+    print(f"\n# {workload}: one traced run per side, seed {seed}")
+    for title, names in (("exact counters", exact), ("timings of this one run", timings)):
+        print(f"{title:<36}{'parent':>16}{'change':>16}")
+        for name in names:
+            p, c = traced["parent"].get(name), traced["change"].get(name)
+            mark = "" if p == c else "  *"
+            print(f"  {name:<34}{fmt(p):>16}{fmt(c):>16}{mark}")
+
+
+def fmt(v):
+    if v is None:
+        return "-"
+    return f"{int(v):,}" if float(v).is_integer() else f"{v:.4g}"
 
 
 if __name__ == "__main__":
