@@ -3,6 +3,10 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 import graft.text.TextAnalysis
 import graft.util.Partitioning.spread
 
@@ -374,53 +378,51 @@ object Dedup {
     * smallest node id in the node's component — the canonical
     * representative a dedup pipeline keeps per cluster.
     *
-    * Alternating large-star / small-star (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14): each round is two
-    * grouped aggregates + joins over the edge list, and the edge set
-    * provably converges to per-component stars centered at the
-    * minimum id in O(log n) rounds — this is the scale-correct
-    * replacement for label propagation, whose round count is the
-    * component DIAMETER (a chain of pairwise-similar documents makes
-    * that linear). No driver-side graph state: the driver loop only
-    * reads one boolean per round (the star-shape convergence test — an
-    * exact fixpoint check, see `isStar` below).
+    * Two stages, one materialized frame between them:
+    *   - **Local contraction** ([[contractPartitions]], Łącki et al.,
+    *     "Connected Components at Scale via Local Contractions", 2018):
+    *     each partition folds its edges into a union-find whose roots
+    *     are their set's smallest id, and emits (member, root) for every
+    *     non-root node. A local set is connected in the input, so the
+    *     components do not change; duplicate edges are absorbed. A
+    *     graph whose edges share one partition comes out as the star
+    *     fixpoint already — the star test below accepts it with zero
+    *     rounds. Memory is bounded: one union-find holds at most
+    *     [[ContractionBudget]] nodes, and a full one emits its stars
+    *     and starts over (components are preserved either way).
+    *   - **Star rounds** (alternating large-star / small-star, Kiveris
+    *     et al., "Connected Components in MapReduce and Beyond",
+    *     SoCC'14): they still follow, because contraction only sees one
+    *     partition at a time — a component split across partitions (or
+    *     across flushes) comes out as several overlapping stars. Each
+    *     round is two grouped aggregates + joins over the edge list,
+    *     and the edge set provably converges to per-component stars
+    *     centered at the minimum id in O(log n) rounds — the
+    *     scale-correct replacement for label propagation, whose round
+    *     count is the component DIAMETER. No driver-side graph state:
+    *     the driver loop only reads one boolean per round (the exact
+    *     star-shape convergence test, see `isStar` below).
     *
-    * Each round materializes its edge set through an EAGER
-    * `localCheckpoint`, which truncates lineage to an RDD-backed leaf.
-    * That is load-bearing twice over: the star transforms reference
-    * their input 3–4 times, so an unmaterialized loop re-plans (and on
-    * a cache miss recomputes) a plan tree that grows ~4^rounds — the
-    * first uncached collect of a 2-round run was measured recomputing
-    * the upstream LSH join sixteen-fold. Local checkpoints live in
-    * executor block storage; on a cluster with executor loss or
-    * dynamic allocation a lost block means recomputing the whole loop,
-    * so when the session has a RELIABLE checkpoint dir configured
-    * (`SparkContext.setCheckpointDir`) the rounds automatically
-    * checkpoint to it instead (`Dataset.checkpoint` — survives
-    * executor loss; loop shape unchanged). `reliableCheckpoint`
-    * overrides the auto-detection in either direction.
+    * The contracted edges and each round's edge set materialize
+    * through [[graft.util.Materialize.rowBlocks]], which truncates
+    * lineage to an RDD-backed leaf (a reliable checkpoint when the
+    * session has a checkpoint dir, so the cut survives executor loss).
+    * That is load-bearing: the star transforms reference their input
+    * 3–4 times, so an unmaterialized loop re-plans (and on a cache
+    * miss recomputes) a plan tree that grows ~4^rounds. Ids keep their
+    * native type and are ordered as `least`/`min` order them.
     * Self-pairs are ignored; nodes never paired are absent (they are
     * their own singleton component by definition). */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 50,
-      reliableCheckpoint: Option[Boolean] = None): DataFrame = {
-    val useReliable = reliableCheckpoint.getOrElse(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-    require(!useReliable ||
-        pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoint=true requires SparkContext.setCheckpointDir")
-    def materialize(df: DataFrame): DataFrame =
-      graft.util.Materialize.rowBlocks(df, Some(useReliable))
+      maxRounds: Int = 50): DataFrame = {
     // Ids keep their NATIVE type: the algorithm needs only a total
-    // order (greatest/least/min), which strings and UUIDs satisfy as
-    // well as longs — a forced numeric cast would null out string ids
-    // and silently drop every edge.
-    val canonical = pairs
+    // order (Spark's, for the column type), which strings and UUIDs
+    // satisfy as well as longs — a forced numeric cast would null out
+    // string ids and silently drop every edge.
+    val edgeList = pairs
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct()
 
     // Convergence test: the loop's only fixpoints are per-component
     // STARS centered at the minimum (each u appears exactly once,
@@ -436,9 +438,11 @@ object Dedup {
     // and its self branch re-emits (member, center)). Fixpoint ⇒
     // star: a u with two centers or a center that is itself a member
     // changes under the next round, so the check is exact — no
-    // checksum nomination, no confirm pass. Edges stay canonical
-    // (u > v), so a star's center is the minimum of its component by
-    // construction and the readout below stays valid.
+    // checksum nomination, no confirm pass. A duplicate edge (two
+    // partitions contracting the same pair) fails it too (du > 1).
+    // Edges stay canonical (u > v), so a star's center is the minimum
+    // of its component by construction and the readout below stays
+    // valid.
     def isStar(e: DataFrame): Boolean = {
       val nodes = e.select(col("u").as("n"), lit(1).as("iu"), lit(0).as("iv"))
         .union(e.select(col("v").as("n"), lit(0).as("iu"), lit(1).as("iv")))
@@ -473,11 +477,11 @@ object Dedup {
         .distinct()
     }
 
-    var edges = materialize(canonical)
+    var edges = graft.util.Materialize.rowBlocks(contractPartitions(edgeList, ContractionBudget))
     var rounds = 0
     var converged = isStar(edges)
     while (!converged && rounds < maxRounds) {
-      edges = materialize(smallStar(largeStar(edges)))
+      edges = graft.util.Materialize.rowBlocks(smallStar(largeStar(edges)))
       converged = isStar(edges)
       rounds += 1
     }
@@ -498,12 +502,84 @@ object Dedup {
       .distinct()
   }
 
-  /** Canonical component id for EVERY document: [[connectedComponents]]
-    * over `pairs` left-joined back onto the corpus, with unpaired
-    * documents labeled as their own singleton component — the full
-    * cluster-assignment a dedup pipeline materializes before choosing
-    * survivors. One broadcast-or-shuffle join beyond the component
-    * computation itself. */
+  /** Most nodes one partition's union-find holds in
+    * [[contractPartitions]] before it emits its stars and starts over.
+    * A node costs about 100 bytes of task heap (a tree-map entry, the
+    * copied id and a parent slot), so this caps the contraction at
+    * roughly 13 MB per running task. */
+  private val ContractionBudget = 1 << 17
+
+  /** Local contraction of an edge list (u, v), partition by partition:
+    * each partition folds its edges into a [[MinRootUnionFind]] of at
+    * most `budget` nodes and emits (x, r) for every non-root node x,
+    * with r the smallest id of x's local set — so u > v on every output
+    * edge, and a partition's output is a star forest without
+    * duplicates. When an edge would take the union-find past `budget`,
+    * the current stars are emitted and it starts over. Every output
+    * edge joins two nodes connected in the input and every input edge's
+    * endpoints share a local set, so the components are unchanged.
+    * Ids are ordered as `least`/`min` order them, and ids equal under
+    * that order are one node. */
+  private[graft] def contractPartitions(edges: DataFrame, budget: Int): DataFrame = {
+    require(budget >= 2, s"contraction budget must hold one edge (2 nodes), got $budget")
+    val idType = edges.schema("u").dataType
+    ColumnBridge.mapInternalPartitions(edges) { rows =>
+      val forest = new MinRootUnionFind(ColumnBridge.ordering(idType), budget)
+      rows.flatMap { r =>
+        val u = InternalRow.copyValue(r.get(0, idType))
+        val v = InternalRow.copyValue(r.get(1, idType))
+        val flushed = if (forest.fits(u, v)) Iterator.empty else forest.drainStars()
+        forest.union(u, v)
+        flushed
+      } ++ forest.drainStars()
+    }
+  }
+
+  /** Union-find over at most `budget` ids whose every root is the
+    * smallest id of its set under `ord` (union links the larger root
+    * under the smaller; path halving keeps finds short). */
+  private final class MinRootUnionFind(ord: Ordering[Any], budget: Int) {
+    private val index = new java.util.TreeMap[Any, Integer](ord)
+    private val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
+    private var parent = new Array[Int](16)
+
+    private def isNew(x: Any): Int = if (index.containsKey(x)) 0 else 1
+    def fits(u: Any, v: Any): Boolean =
+      ids.length + isNew(u) + isNew(v) <= budget
+
+    private def node(x: Any): Int = {
+      val known = index.get(x)
+      if (known != null) known.intValue
+      else {
+        val i = ids.length
+        if (i == parent.length) parent = java.util.Arrays.copyOf(parent, i * 2)
+        parent(i) = i
+        ids += x
+        index.put(x, i)
+        i
+      }
+    }
+    private def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def union(u: Any, v: Any): Unit = {
+      val (a, b) = (find(node(u)), find(node(v)))
+      if (a != b) { if (ord.lt(ids(a), ids(b))) parent(b) = a else parent(a) = b }
+    }
+
+    /** (member, root) rows for every non-root node; empties the forest. */
+    def drainStars(): Iterator[InternalRow] = {
+      val stars = ids.indices.iterator.flatMap { i =>
+        val r = find(i)
+        if (r == i) None else Some(new GenericInternalRow(Array[Any](ids(i), ids(r))))
+      }.toArray
+      index.clear(); ids.clear()
+      stars.iterator
+    }
+  }
+
   /** The pair-id → document-id cast in [[componentIds]] and
     * [[dropNearDuplicates]] must be LOSSLESS: an incompatible cast
     * (e.g. string pair ids against a long doc id) evaluates to null,
@@ -520,6 +596,12 @@ object Dedup {
         s"$docIdType — matching on it would null out and silently mislabel; " +
         "align the id types before joining components back")
 
+  /** Canonical component id for EVERY document: [[connectedComponents]]
+    * over `pairs` left-joined back onto the corpus, with unpaired
+    * documents labeled as their own singleton component — the full
+    * cluster-assignment a dedup pipeline materializes before choosing
+    * survivors. One broadcast-or-shuffle join beyond the component
+    * computation itself. */
   def componentIds(
       df: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",

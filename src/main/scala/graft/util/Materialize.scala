@@ -20,10 +20,8 @@ import org.apache.spark.sql.Dataset
   * directory configured (`SparkContext.setCheckpointDir`), materialize
   * through `Dataset.checkpoint` instead: same eager cut, blocks
   * survive executor loss. `reliable` overrides the auto-detection in
-  * either direction (mirroring `Dedup.connectedComponents`'s
-  * `reliableCheckpoint` contract). Results are identical in both
-  * modes — only the storage of the cut changes; MaterializeSpec pins
-  * that equivalence.
+  * either direction. Results are identical in both modes — only the
+  * storage of the cut changes; MaterializeSpec pins that equivalence.
   *
   * Block lifetime: checkpoint blocks free when the ContextCleaner GCs
   * the unreferenced RDD (driver periodic GC, default 30 min) — fine

@@ -16,6 +16,31 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
     rows.toSeq.toDF("doc_id", "text")
   }
 
+  /** In-memory union-find reference: (node, smallest node of its
+    * component) for every node of a non-self edge. */
+  private def unionFind[T](edges: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map[T, T]()
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      if (a != b) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb) }
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  /** Chain 1-2-3-4 (diameter > 1 forces multiple star rounds), a
+    * cycle 10-11-12-10, a star 20-{21,22,23}, an isolated pair, a
+    * self-loop (must be ignored), plus a seeded random graph with
+    * repeated and reversed edges. */
+  private val fixedAndRandomGraph: Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(11)
+    Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (12L, 10L),
+      (20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L), (40L, 40L)) ++
+      Seq.fill(120)((rng.nextInt(60) + 100L, rng.nextInt(60) + 100L))
+  }
+
   private val base =
     "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square at dusk"
 
@@ -424,25 +449,9 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
   test("connectedComponents matches union-find on chains, cycles, stars and a random graph") {
     val s = spark
     import s.implicits._
-    // Chain 1-2-3-4 (diameter > 1 forces multiple star rounds), a
-    // cycle 10-11-12-10, a star 20-{21,22,23}, an isolated pair, a
-    // self-loop (must be ignored), plus a seeded random graph.
-    val fixed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (12L, 10L),
-      (20L, 21L), (20L, 22L), (20L, 23L), (30L, 31L), (40L, 40L))
-    val rng = new scala.util.Random(11)
-    val random = Seq.fill(120)((rng.nextInt(60) + 100L, rng.nextInt(60) + 100L))
-    val pairs = (fixed ++ random).toDF("id_a", "id_b")
-
-    // In-memory union-find reference.
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    (fixed ++ random).foreach { case (a, b) =>
-      if (a != b) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) }
-    }
-    val expected = parent.keys.map(x => x -> find(x)).toMap -- Seq(40L) // self-loop-only node absent
+    val pairs = fixedAndRandomGraph.toDF("id_a", "id_b")
+    val expected = unionFind(fixedAndRandomGraph)
+    expected should not contain key(40L) // self-loop-only node absent
 
     val got = Dedup.connectedComponents(pairs, "id_a", "id_b").as[(Long, Long)]
       .collect().toMap
@@ -451,6 +460,75 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
     got.groupBy(_._2).foreach { case (comp, members) =>
       comp shouldBe members.keys.min
     }
+  }
+
+  test("connectedComponents: one partition contracts to stars and needs zero rounds") {
+    val s = spark
+    import s.implicits._
+    val edges = fixedAndRandomGraph
+    // Every edge in one partition: local contraction alone yields the
+    // star fixpoint, so even maxRounds = 0 succeeds.
+    val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b").coalesce(1),
+        "id_a", "id_b", maxRounds = 0)
+      .as[(Long, Long)].collect().toMap
+    got shouldBe unionFind(edges)
+  }
+
+  test("connectedComponents: edges spread over 8 partitions contract partially, then rounds finish") {
+    val s = spark
+    import s.implicits._
+    val edges = fixedAndRandomGraph
+    val pairs = edges.toDF("id_a", "id_b").repartition(8)
+    // Components cross partitions here, so zero rounds cannot suffice.
+    an[IllegalStateException] should be thrownBy
+      Dedup.connectedComponents(pairs, "id_a", "id_b", maxRounds = 0)
+    Dedup.connectedComponents(pairs, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap shouldBe unionFind(edges)
+  }
+
+  test("connectedComponents: string ids contract and round in string order") {
+    val s = spark
+    import s.implicits._
+    // Unpadded names order differently as strings than as numbers
+    // ("n10" < "n9"): the component minimum must be the string one.
+    val edges = fixedAndRandomGraph.map { case (a, b) => (s"n$a", s"n$b") }
+    val expected = unionFind(edges)
+    for (pairs <- Seq(edges.toDF("id_a", "id_b").coalesce(1),
+        edges.toDF("id_a", "id_b").repartition(8)))
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
+        .as[(String, String)].collect().toMap shouldBe expected
+  }
+
+  test("contractPartitions: a full union-find flushes its stars and keeps the components") {
+    val s = spark
+    import s.implicits._
+    val edges = fixedAndRandomGraph
+    val edgeList = edges.toDF("u", "v").filter(col("u") =!= col("v")).coalesce(1)
+    // A budget of 2 nodes holds one edge, so nearly every edge flushes.
+    val tiny = Dedup.contractPartitions(edgeList, budget = 2).as[(Long, Long)].collect().toSeq
+    val full = Dedup.contractPartitions(edgeList, budget = 1 << 17).as[(Long, Long)].collect().toSeq
+    all(tiny ++ full) should matchPattern { case (u: Long, v: Long) if u > v => }
+    unionFind(tiny) shouldBe unionFind(edges)
+    unionFind(full) shouldBe unionFind(edges)
+    // Unflushed, the one partition is a star forest: one edge per
+    // non-minimum node. Flushing leaves more edges than that.
+    full should have size (unionFind(edges).count { case (x, c) => x != c }).toLong
+    tiny.size should be > full.size
+  }
+
+  test("connectedComponents: a one-partition 4-chain runs fewer Spark jobs than distinct + star rounds") {
+    val s = spark
+    import s.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b").coalesce(1)
+    val jobs = jobsOf {
+      Dedup.connectedComponents(pairs, "id_a", "id_b").collect()
+      ()
+    }
+    // A global distinct before the star rounds ran 23 jobs here (the
+    // distinct, its checkpoint, star tests and star rounds, the
+    // readout). Local contraction leaves 5: the checkpoint, one star
+    // test (2) and the readout's distinct (2).
+    jobs should be <= 5
   }
 
   test("dropNearDuplicates components policy keeps exactly one doc per cluster") {
@@ -489,10 +567,6 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
       val reliable = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
       reliable shouldBe local
-      // Explicit override back to local still works under the dir.
-      val forcedLocal = Dedup.connectedComponents(pairs, "id_a", "id_b",
-        reliableCheckpoint = Some(false)).as[(Long, Long)].collect().toMap
-      forcedLocal shouldBe local
     } finally {
       // No public unset API: clear the private conf so later suites
       // keep exercising the localCheckpoint path.
@@ -500,9 +574,6 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
       f.invoke(sc, None)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
-    // Asking for reliable checkpointing without a dir fails fast.
-    an[IllegalArgumentException] should be thrownBy
-      Dedup.connectedComponents(pairs, "id_a", "id_b", reliableCheckpoint = Some(true))
   }
 
   test("connectedComponents works on string ids (native ordering, no numeric cast)") {
@@ -529,8 +600,10 @@ class DedupSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val s = spark
     import s.implicits._
     // A 4-chain needs more than one star round; a silent exit would
-    // label node 4 with component 2.
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    // label node 4 with component 2. One edge per partition, so local
+    // contraction cannot shorten the chain before the rounds.
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    val pairs = s.sparkContext.parallelize(edges, numSlices = edges.size).toDF("id_a", "id_b")
     an[IllegalStateException] should be thrownBy
       Dedup.connectedComponents(pairs, "id_a", "id_b", maxRounds = 1)
   }
