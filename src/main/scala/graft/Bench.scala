@@ -288,15 +288,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession.suite(defaultCpus = 4)
 
     // Sampled before this process does any parallel work: a 1-min load
     // average near/above the core count here means OTHER processes own
@@ -498,7 +490,7 @@ object Bench {
       r
     }
     val cores = Runtime.getRuntime.availableProcessors()
-    val workers = cpus.toIntOption.getOrElse(cores)
+    val workers = spark.sparkContext.defaultParallelism
     def dirty(r: QueryResult): Boolean =
       isDirty(r.wall, r.cpu, r.extLoad, workers, cores)
     val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) => runQuery(name, fn) }

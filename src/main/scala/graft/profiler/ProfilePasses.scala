@@ -233,18 +233,15 @@ object ProfilePasses {
     * non-null values, the reference's three regexes verbatim. Regex
     * matching is the most CPU-expensive metric in the profile, so the
     * standalone pass spreads a poorly-split input across the session's
-    * cores first (no-op once the scan has enough splits);
-    * `spreadInput = false` honors a caller's as-is partitioning. */
-  def textPatterns(df: DataFrame, cols: Seq[String],
-      spreadInput: Boolean = true): DataFrame = {
+    * cores first (no-op once the scan has enough splits). */
+  def textPatterns(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { n =>
       Seq(
         count(when(emailMatch(c(n)), lit(1))).as(s"${n}_email_count"),
         count(when(c(n).rlike(NumericPattern), lit(1))).as(s"${n}_numeric_count"),
         count(when(c(n).rlike(DatePattern), lit(1))).as(s"${n}_date_count"))
     }
-    val input = if (spreadInput) graft.util.Partitioning.spread(df) else df
-    input.agg(aggs.head, aggs.tail: _*)
+    graft.util.Partitioning.spread(df).agg(aggs.head, aggs.tail: _*)
   }
 
   /** [[EmailPattern]] with a cheap NECESSARY prefilter: `.*@.*\..*`

@@ -9,66 +9,38 @@ import graft.compare.ProfileCompare
 import graft.model._
 import graft.types.ColumnBuckets
 
-/** Profiler configuration.
+/** Profiler configuration: only the options callers set differently.
   *
   * `exact = true` reproduces the reference's warehouse semantics
-  * bit-for-bit (exact COUNT DISTINCT, exact interpolated percentiles)
-  * for the correctness oracle; `exact = false` is the 100 TB mode:
-  * HLL++ distincts and sketch percentiles, no Expand operator, every
-  * metric single-pass.
+  * bit-for-bit (exact COUNT DISTINCT, exact interpolated percentiles,
+  * full-row duplicate groups) for the correctness oracle;
+  * `exact = false` is the 100 TB mode: HLL++ distincts, sketch
+  * percentiles, a 128-bit row digest as the duplicate key, no Expand
+  * operator, every metric single-pass.
   *
-  * `frequentValuesRowLimit` mirrors the reference's hard skip above
-  * 1M rows (profile_engine.py:295-297); None (default) removes the
-  * cliff: exact mode's top-1 rides on the distinct-count aggregate,
-  * and approx mode's melt+hash-agg top-1 is cheap at any scale.
-  *
-  * The duplicate check shuffles full rows only in exact mode (needed
-  * for oracle parity); otherwise — the scale path — it groups by a
-  * 128-bit xxhash64-pair row digest so the shuffle key is two longs
-  * regardless of schema width. `duplicateHashProjection = true`
-  * forces the digest even in exact mode.
+  * `persist` caches the input once ahead of the concurrent passes;
+  * off, each pass re-scans the source with its own column pruning
+  * (the only shape a table too large to cache has).
   */
 final case class ProfilerConfig(
     exact: Boolean = true,
+    /** Attach sample rows (pass E): ProfilePasses.samples' 10 rows,
+      * seed 42 for `random`. */
     includeSamples: Boolean = false,
-    sampleRows: Int = 10,
     /** `head` (deterministic prefix) or `random` (seed-stable
       * representative sample via per-partition top-n on rand). The
       * config layer's `profiling.sample_method` default is `random`,
       * matching the reference; the engine default stays `head` so
       * direct API profiles are reproducible row-for-row. */
     sampleMethod: String = "head",
-    sampleSeed: Long = 42L,
     /** Trend-series caps, enforced in ProfileCompare.appendTrends
       * (reference: config.py:19-20,56-60). */
     maxHistory: Int = 50,
     historyRetentionDays: Int = 30,
-    outlierLimit: Int = 10,
+    /** Sigma multiplier for outliers and for anomalies against a
+      * historical profile. */
     anomalyThreshold: Double = 3.0,
-    frequentValuesRowLimit: Option[Long] = None,
-    duplicateHashProjection: Boolean = false,
     persist: Boolean = true,
-    /** HLL relative error in approx mode. 0.05 (Spark's default) costs
-      * ~2^10 registers per column; 0.01 costs ~2^15 and is several
-      * times slower to update and merge. */
-    distinctRsd: Double = 0.05,
-    /** In approx mode, skip the top-1 frequent value for columns whose
-      * distinct count exceeds this share of rows — the melt would
-      * shuffle ~every value to learn that the winner occurs ~once. */
-    frequentValuesMaxDistinctShare: Double = 0.9,
-    /** Spread a poorly-split, large-enough input across the session's
-      * cores before persisting (see Partitioning.spreadIfLarge) — a
-      * no-op whenever the scan already has at least as many splits as
-      * cores, i.e. always at scale. Off = profile the input
-      * partitioning as-is. */
-    spreadInput: Boolean = true,
-    /** Minimum scan bytes before spreadInput pays for its exchange.
-      * Negative (the default) derives the gate from the session —
-      * the measured 32-core break-even rescaled per core of default
-      * parallelism (see Partitioning.spreadIfLarge) — so other
-      * session shapes aren't silently gated by a 32-core constant.
-      * Deployments that measured their own break-even set it here. */
-    spreadMinBytes: Long = -1L,
     /** Per-pass wall-clock sink: invoked as (passName, seconds) after
       * each profiling job completes. Default drops the timings; wire a
       * collector here to see where a profile's time goes. */
@@ -121,10 +93,7 @@ object Profiler {
     // nothing is shuffled where it matters. Samples (pass E) still
     // read the ORIGINAL df: head sampling stays input-order stable
     // instead of picking up round-robin placement.
-    val input =
-      if (config.spreadInput)
-        graft.util.Partitioning.spreadIfLarge(df, config.spreadMinBytes)
-      else df
+    val input = graft.util.Partitioning.spreadIfLarge(df)
     // COLUMNAR persist — deliberately NOT the row-block localCheckpoint
     // the narrow multiply-read frames switched to this round: the
     // profiled table is WIDE and each pass reads a column SUBSET, so
@@ -141,6 +110,11 @@ object Profiler {
   }
 
   private def round2(x: Double): Double = math.round(x * 100.0) / 100.0
+
+  /** In approx mode, skip the top-1 frequent value for columns whose
+    * distinct count exceeds this share of rows — the melt would
+    * shuffle ~every value to learn that the winner occurs ~once. */
+  private val FrequentValuesMaxDistinctShare = 0.9
 
   private def buildProfile(
       df: DataFrame,
@@ -213,11 +187,11 @@ object Profiler {
           ProfilePasses.distinctAndFrequent(df, b.all).collect())))
       else None
 
-    // ---- Pass B: duplicates. The digest projection is the default
-    // whenever exact-oracle parity is not required: at 100 TB the
-    // full-row variant's shuffle key is every column.
-    val fB = Future(timed("B_duplicates")(ProfilePasses.duplicateGroupCount(
-      df, cfg.duplicateHashProjection || !cfg.exact).collect()))
+    // ---- Pass B: duplicates. The digest projection is used whenever
+    // exact-oracle parity is not required: at 100 TB the full-row
+    // variant's shuffle key is every column.
+    val fB = Future(timed("B_duplicates")(
+      ProfilePasses.duplicateGroupCount(df, !cfg.exact).collect()))
 
     // ---- Pass F: nested-column (multimodal) stats.
     val fF = Future(timed("F_nested") {
@@ -257,7 +231,7 @@ object Profiler {
     // ---- Pass E: samples.
     val fE = Future(timed("E_samples") {
       if (!cfg.includeSamples) Nil: Seq[Map[String, Any]]
-      else ProfilePasses.samples(sampleSource, cfg.sampleRows, cfg.sampleMethod, cfg.sampleSeed)
+      else ProfilePasses.samples(sampleSource, method = cfg.sampleMethod)
         .collect().toSeq.map { r =>
         r.schema.fields.map(_.name).zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap
       }
@@ -341,23 +315,21 @@ object Profiler {
     }.toMap
 
     // ---- Phase 2: passes that consume pass-A statistics.
-    // ---- Frequent values (reference skips above its row limit; we
-    // only skip if configured for parity testing). Both paths
-    // stringify the top-1 value; it is converted back to the column's
-    // native type driver-side so the profile JSON carries typed values
-    // like the reference does. Exact mode already has them from pass
-    // A'. Approx mode runs pass C, a melt that prunes near-unique
-    // columns using the distinct counts already in hand — their top-1
-    // occurs ~once and would cost a shuffle of nearly every value.
-    val skipFrequent = cfg.frequentValuesRowLimit.exists(rowCount > _)
+    // ---- Frequent values (the reference skips them above 1M rows; we
+    // never do). Both paths stringify the top-1 value; it is converted
+    // back to the column's native type driver-side so the profile JSON
+    // carries typed values like the reference does. Exact mode already
+    // has them from pass A'. Approx mode runs pass C, a melt that
+    // prunes near-unique columns using the distinct counts already in
+    // hand — their top-1 occurs ~once and would cost a shuffle of
+    // nearly every value.
     val fC = fused match {
       case Some(rows) => Future.successful(
-        if (skipFrequent) Map.empty[String, FrequentValue]
-        else rows.map { case (n, (_, v, f)) => n -> frequentValue(n, v, f) })
+        rows.map { case (n, (_, v, f)) => n -> frequentValue(n, v, f) })
       case None => Future(timed("C_frequent_values") {
         val fvCols = if (rowCount == 0) b.all else b.all.filter(n =>
-          distinctCounts(n) <= rowCount * cfg.frequentValuesMaxDistinctShare)
-        if (skipFrequent || fvCols.isEmpty) Map.empty[String, FrequentValue]
+          distinctCounts(n) <= rowCount * FrequentValuesMaxDistinctShare)
+        if (fvCols.isEmpty) Map.empty[String, FrequentValue]
         else ProfilePasses.frequentValues(df, fvCols, rowCount).collect().map { r =>
           val colName = r.getString(r.fieldIndex("column"))
           colName -> frequentValue(colName, r.getString(r.fieldIndex("value")),
@@ -373,7 +345,7 @@ object Profiler {
     val fD = Future(timed("D_outliers") {
       if (statPairs.isEmpty) Map.empty[String, Seq[Double]]
       else {
-        val r = ProfilePasses.outliers(df, statPairs, cfg.anomalyThreshold, cfg.outlierLimit).head()
+        val r = ProfilePasses.outliers(df, statPairs, cfg.anomalyThreshold).head()
         statPairs.keys.map { n =>
           n -> r.getSeq[Double](r.fieldIndex(s"${n}_outliers"))
         }.filter(_._2.nonEmpty).toMap
@@ -440,6 +412,11 @@ object Profiler {
     }
   }
 
+  /** HLL relative error in approx mode. 0.05 (Spark's default) costs
+    * ~2^10 registers per column; 0.01 costs ~2^15 and is several
+    * times slower to update and merge. */
+  private val DistinctRsd = 0.05
+
   /** Pass A fused: null counts + numeric stats + text lengths +
     * text patterns + date stats in a single Aggregate (one scan) —
     * plus, in approx mode, the per-column HLL distinct sketches
@@ -463,7 +440,7 @@ object Profiler {
         (if (cfg.exact) Nil
          else b.all.map(n =>
            // comparable() keeps MapType sketchable (JSON rendering).
-           approx_count_distinct(ProfilePasses.comparable(df, n), cfg.distinctRsd)
+           approx_count_distinct(ProfilePasses.comparable(df, n), DistinctRsd)
              .as(s"${n}_distinct"))) ++
         b.all.map(n => count(when(c(n).isNull, lit(1))).as(s"${n}_nulls")) ++
         b.numeric.flatMap { n =>

@@ -51,31 +51,26 @@ object Partitioning {
     * `defaultParallelism` carries the measurement to other session
     * shapes instead of silently applying a 32-core constant to a
     * 4-core notebook (gate 8× too high) or a 1000-core cluster
-    * (8× too low). A fixed measured value still beats the derivation
-    * on any specific deployment — pass it explicitly. */
+    * (8× too low). */
   private[graft] val spreadBreakEvenPerCore: Long = 256L << 10
 
   /** The session-derived byte gate for [[spreadIfLarge]]. */
-  def derivedSpreadMinBytes(spark: SparkSession): Long =
+  private[graft] def derivedSpreadMinBytes(spark: SparkSession): Long =
     math.max(1, spark.sparkContext.defaultParallelism) * spreadBreakEvenPerCore
 
   /** [[spread]] gated on input size: only fan out when the scan is
-    * poorly split AND carries at least `minBytes`. For generic
+    * poorly split AND carries at least [[derivedSpreadMinBytes]]:
+    * [[spreadBreakEvenPerCore]] × default parallelism, the measured
+    * 32-core break-even rescaled to the session's shape. For generic
     * columnar aggregation the local exchange has a real fixed cost,
     * so spreading a table a single task chews through in well under
     * that cost is a net loss. Operators whose per-byte CPU is orders
     * of magnitude higher than columnar aggregation (regex matching,
     * k-gram hashing, vector math) should call the ungated [[spread]]
     * instead — for them even a sub-MB input is minutes of single-core
-    * work.
-    *
-    * `minBytes < 0` (the default) derives the gate from the session:
-    * [[spreadBreakEvenPerCore]] × default parallelism — the measured
-    * 32-core break-even rescaled to the session's shape. Pass an
-    * explicit value when a deployment has measured its own. */
-  def spreadIfLarge(df: DataFrame, minBytes: Long = -1L): DataFrame =
-    spreadImpl(df,
-      if (minBytes >= 0) minBytes else derivedSpreadMinBytes(df.sparkSession))
+    * work. */
+  def spreadIfLarge(df: DataFrame): DataFrame =
+    spreadImpl(df, derivedSpreadMinBytes(df.sparkSession))
 
   private def spreadImpl(df: DataFrame, minBytes: Long): DataFrame = {
     // Streaming plans expose no file index to inspect (and micro-batch

@@ -60,14 +60,10 @@ import graft.model.{ValidationResult, ValidationRule}
   */
 object Validator {
 
-  def run(
-      spark: SparkSession,
-      rules: Seq[ValidationRule],
-      parallelism: Int = 1): Seq[ValidationResult] =
-    if (parallelism <= 1) rules.map(runOne(spark, _))
-    else withPool(spark, math.min(parallelism, rules.size)) { implicit ec =>
-      Await.result(Future.traverse(rules)(r => Future(runOne(spark, r))), Duration.Inf)
-    }
+  /** Runs each rule as its own query, one after another — the
+    * unfused reference that [[runBatched]] must match. */
+  def run(spark: SparkSession, rules: Seq[ValidationRule]): Seq[ValidationResult] =
+    rules.map(runOne(spark, _))
 
   def runOne(spark: SparkSession, rule: ValidationRule): ValidationResult =
     evaluate(rule)(firstValue(spark.sql(rule.query)))

@@ -552,8 +552,8 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkTestBase {
     graft.util.Partitioning.derivedSpreadMinBytes(spark) shouldBe
       spark.sparkContext.defaultParallelism.toLong * (256L << 10)
     graft.util.Partitioning.spreadIfLarge(one) should be theSameInstanceAs one
-    // Gate dropped to zero → behaves like the ungated spread.
-    physical(graft.util.Partitioning.spreadIfLarge(one, minBytes = 0L))
+    // Gate dropped to zero → the ungated spread.
+    physical(graft.util.Partitioning.spread(one))
       .should(include("RoundRobinPartitioning(2"))
   }
 

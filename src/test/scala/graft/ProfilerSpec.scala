@@ -88,10 +88,9 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
   }
 
   test("profile with random sampleMethod carries n sample rows") {
-    val p = Profiler.profile(employeesDf, "employees",
-      ProfilerConfig(persist = false, includeSamples = true,
-        sampleRows = 4, sampleMethod = "random"))
-    p.samples should have size 4
+    val p = Profiler.profile(spark.range(50).toDF("id"), "range",
+      ProfilerConfig(persist = false, includeSamples = true, sampleMethod = "random"))
+    p.samples should have size 10
   }
 
   test("duplicate hash-projection path agrees with full-row groupBy") {
@@ -100,7 +99,7 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val df = Seq(("a", 1), ("a", 1), ("b", 2), ("b", 3)).toDF("k", "v")
     val full = Profiler.profile(df, "t", ProfilerConfig(persist = false)).duplicateCount
     val hashed = Profiler.profile(df, "t",
-      ProfilerConfig(persist = false, duplicateHashProjection = true)).duplicateCount
+      ProfilerConfig(exact = false, persist = false)).duplicateCount
     hashed shouldBe full
     hashed shouldBe 1L
   }
@@ -115,14 +114,13 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
       .toDF("a", "b")
     val full = Profiler.profile(df, "t", ProfilerConfig(persist = false)).duplicateCount
     val hashed = Profiler.profile(df, "t",
-      ProfilerConfig(persist = false, duplicateHashProjection = true)).duplicateCount
+      ProfilerConfig(exact = false, persist = false)).duplicateCount
     full shouldBe 0L
     hashed shouldBe 0L
     // True duplicates with nulls still group.
     val dups = Seq((Some("x"), Option.empty[String]), (Some("x"), Option.empty[String]))
       .toDF("a", "b")
-    Profiler.profile(dups, "t",
-      ProfilerConfig(persist = false, duplicateHashProjection = true))
+    Profiler.profile(dups, "t", ProfilerConfig(exact = false, persist = false))
       .duplicateCount shouldBe 1L
   }
 
@@ -577,15 +575,6 @@ class ProfilerSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val p = checkFusedParity(df)
     p.completeness("c68").distinctCount shouldBe 71L
     p.completeness("c0").distinctCount shouldBe 3L
-  }
-
-  test("frequentValuesRowLimit empties the frequent values but keeps exact distinct counts") {
-    val p = Profiler.profile(typedDf, "t",
-      ProfilerConfig(persist = false, frequentValuesRowLimit = Some(5L)))
-    p.frequentValues shouldBe empty
-    p.completeness("big").distinctCount shouldBe 4L
-    Profiler.profile(typedDf, "t", ProfilerConfig(persist = false,
-      frequentValuesRowLimit = Some(6L))).frequentValues should not be empty
   }
 
   test("exact profile reports the fused passes under A1_distinct and A2_percentiles") {
