@@ -10,6 +10,13 @@ import graft.profiler.{Profiler, ProfilerConfig}
   * stored profile possible (reference cli/profile.py:74-82). */
 class JsonRoundTripSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
+  test("Json.str escapes quotes, backslashes and control chars") {
+    Json.str("plain") shouldBe "\"plain\""
+    Json.str("a\"b\\c") shouldBe "\"a\\\"b\\\\c\""
+    Json.str("x\ny") shouldBe "\"x\\ny\""
+    Json.str("x\u0001y") shouldBe "\"x\\u0001y\""
+  }
+
   test("profile survives a JSON round trip on every compared field") {
     val p = Profiler.profile(employeesDf, "employees",
       ProfilerConfig(includeSamples = true, persist = false))

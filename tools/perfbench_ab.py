@@ -24,7 +24,8 @@ With --trace-seed N, each side also makes one traced run (`--trace 1`) on
 seed N after the pairs, and the per-layer metrics are printed side by side:
 first the counters that repeat exactly for the same code and seed
 (`perfbench/metrics.py`), then the timings of that single run, which are
-one sample each and carry no claim. `--pairs 0` makes only the traced runs.
+one sample each and carry no claim, and whether the two traced runs' first-call
+digests agree. `--pairs 0` makes only the traced runs.
 """
 
 import argparse
@@ -139,18 +140,29 @@ def main():
             p, c = runs["parent"][-1][0], runs["change"][-1][0]
             print(f"pair {i + 1}/{len(seeds)} seed={seed} first={order[0]}  call_s.p50 "
                   f"parent {p['call_s.p50']:.3f} change {c['call_s.p50']:.3f}", flush=True)
-        traced = {side: run_once(sides[side], a.workload, a.trace_seed, trace=1)[0]
+        traced = {side: run_once(sides[side], a.workload, a.trace_seed, trace=1)
                   for side in sides} if a.trace_seed is not None else None
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
+    summary = {"workload": a.workload, "parent": a.parent, "seeds": seeds}
     if traced is not None:
-        print_traced(a.workload, a.trace_seed, spec, traced)
-    if not seeds:
-        return 0
+        print_traced(a.workload, a.trace_seed, spec, {s: traced[s][0] for s in traced})
+        digests = {s: traced[s][2] for s in traced}
+        same = digests["parent"] == digests["change"] and digests["parent"] is not None
+        print(f"first-call digest equal (traced seed {a.trace_seed}): {str(same).lower()}")
+        summary["traced"] = {"seed": a.trace_seed, "same_first_call_digest": same,
+                             "digest": digests, **{s: traced[s][0] for s in traced}}
+    if seeds:
+        summary.update(paired_summary(a, seeds, spec, runs))
+    if a.out:
+        Path(a.out).write_text(json.dumps(summary, indent=1, sort_keys=True) + "\n")
+    return 0
 
+
+def paired_summary(a, seeds, spec, runs):
+    """Verdicts over the pairs, printed as a table and returned for --out."""
     summary = {
-        "workload": a.workload, "parent": a.parent, "seeds": seeds,
         "metrics": [verdict(m["name"], m["better"],
                             [r[0][m["name"]] for r in runs["parent"]],
                             [r[0][m["name"]] for r in runs["change"]])
@@ -175,11 +187,7 @@ def main():
     print(f"failed_frac max: parent {summary['failed_frac']['parent']:.3g}, "
           f"change {summary['failed_frac']['change']:.3g}")
     print(f"first-call digest equal on every seed: {summary['same_first_call_digest']}")
-    if traced is not None:
-        summary["traced"] = {"seed": a.trace_seed, **traced}
-    if a.out:
-        Path(a.out).write_text(json.dumps(summary, indent=1, sort_keys=True) + "\n")
-    return 0
+    return summary
 
 
 def print_traced(workload, seed, spec, traced):
